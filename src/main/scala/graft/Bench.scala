@@ -330,6 +330,25 @@ object Bench {
       dt
     }
 
+    // janino work inside the timed passes (every pass after a query's
+    // cold one, contention retries included): with the generated-class
+    // cache holding (GraftSession.codegenReuse) both stay near 0, so a
+    // cache regression shows in the full record without a rerun
+    var timedCodegenS = 0.0
+    var timedCodegenClasses = 0L
+    def codegenCounters(): (Double, Long) =
+      (org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e9,
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    def timedOnce(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      val (s0, c0) = codegenCounters()
+      val dt = runOnce(name, fn)
+      val (s1, c1) = codegenCounters()
+      timedCodegenS += s1 - s0
+      timedCodegenClasses += c1 - c0
+      dt
+    }
+
     var coldTotal = 0.0
     // GRAFT_BENCH_ONLY=<regex>: dev-loop subset runs (targeted quiet
     // re-measures of flagged rows without paying the full suite). The
@@ -341,13 +360,13 @@ object Bench {
     val results = queryList.zipWithIndex.map { case ((name, fn), i) =>
       if (i == midAt && i > 0) sentinel() // middle
       coldTotal += runOnce(name, fn) // untimed warmup (cold) pass
-      var best = Seq.fill(TimedPasses)(runOnce(name, fn)).min
+      var best = Seq.fill(TimedPasses)(timedOnce(name, fn)).min
       // per-query contention retry: 3× over the last-quiet reference
       // is almost always the box, not the code — one more pass usually
       // lands in a quieter window. Still 3× after the retry → flag the
       // row with the machine state seen at that moment.
       for (ref <- reference.get(name) if best > 3 * ref && !errors.contains(name)) {
-        best = math.min(best, runOnce(name, fn))
+        best = math.min(best, timedOnce(name, fn))
         if (best > 3 * ref)
           contendedRows += name -> (f"min=$best%.2fs ref=$ref%.2fs " +
             f"calib=${calibrate()}%.3fs loadavg=${loadavg()}")
@@ -481,7 +500,7 @@ object Bench {
     def line(qs: Iterable[(String, Double)], prec: Int): String = {
       val dict = qs.map { case (k, v) => s"\"" + k + "\":" + num(v, prec) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$dict,"sf":"$sfDir","method":"warmup+min-of-$TimedPasses","cold_total":${num(coldTotal, 3)},"calib":$calibJson,"mem_calib":$memCalibJson,"cpu_stat":$cpuStat,"loadavg":$loadJson,"load_gate":$gateJson,"ref_rows":${reference.size},"contended_rows":$contendedJson,"retimed":$retimedJson,"errors":$errJson}"""
+      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$dict,"sf":"$sfDir","method":"warmup+min-of-$TimedPasses","cold_total":${num(coldTotal, 3)},"timed_codegen_classes":$timedCodegenClasses,"timed_codegen_s":${num(timedCodegenS, 3)},"calib":$calibJson,"mem_calib":$memCalibJson,"cpu_stat":$cpuStat,"loadavg":$loadJson,"load_gate":$gateJson,"ref_rows":${reference.size},"contended_rows":$contendedJson,"retimed":$retimedJson,"errors":$errJson}"""
     }
     // Full-precision, full-name line goes to a file; stdout gets a
     // COMPACT summary guaranteed to FIT the driver's ~2000-char stdout

@@ -209,7 +209,7 @@ object Bpe {
     merges.result()
     // checkpoint blocks must not outlive a THROWING train either — a
     // long-lived session retrying failed fits would accumulate them
-    } finally hist.unpersist()
+    } finally NearDup.freeLocalCheckpoint(hist)
   }
 
   /** UNtruncated (word, cnt) — the BPE sufficient statistic. Unlike
@@ -271,7 +271,7 @@ object Bpe {
           mergeHistograms(spark.read.parquet(storePath), batchH)
         else batchH
       graft.io.Sinks.overwriteInPlace(merged, storePath)
-    } finally batchH.unpersist()
+    } finally NearDup.freeLocalCheckpoint(batchH)
   }
 
   /** Fit on a corpus, returning BOTH the collected histogram and the

@@ -395,13 +395,15 @@ object NearDup {
     bandedSignatures(sigs, id, numHashes, rowsPerBand, "appendSignatureStore")
       .select(col("__id").as(id), col("__band").as("band"),
         pmod(xxhash64(col("__band")), lit(buckets.toLong)).as("band_bucket"))
-      // one writer task per bucket (the LabelStore discipline): an
-      // un-repartitioned append writes tasks × buckets sliver files
-      // PER TICK of the streaming sink, and probe-side scan cost is
-      // gated on file count. Callers size `buckets` so one bucket of
-      // one batch ≈ one task's rows; `Sinks.compact` handles long-run
-      // accumulation across appends.
-      .repartition(buckets, col("band_bucket"))
+      // each bucket in exactly one writer task (the LabelStore
+      // discipline): an un-repartitioned append writes tasks × buckets
+      // sliver files PER TICK of the streaming sink, and probe-side
+      // scan cost is gated on file count. No fixed partition count:
+      // AQE coalesces the hash partitions to the batch's size (whole
+      // partitions only, so a bucket never splits), where a count of
+      // `buckets` would run that many reduce tasks for any batch.
+      // `Sinks.compact` handles long-run accumulation across appends.
+      .repartition(col("band_bucket"))
       .write.mode("append").partitionBy("band_bucket").parquet(path)
   }
 

@@ -365,11 +365,14 @@ object TextAnalysis {
     // sessions release the blocks after consuming the result via
     // `releasePpxBands` — Dataset.unpersist does not cover
     // local-checkpoint blocks (NearDup.freeLocalCheckpoint).
-    val scored =
-      Pinned.track(bigramLogProb(score, corpus, id, text).localCheckpoint(true))
+    val scored = bigramLogProb(score, corpus, id, text).localCheckpoint(true)
     val cutsRow = scored.agg(expr(
       s"percentile(avg_logprob, array($pLow, $pHigh))")).head()
-    if (cutsRow.isNullAt(0)) {
+    // track the RETURNED frame, whose plan holds the checkpoint leaf:
+    // the registry's reference is weak, and `scored` is unreachable
+    // once this returns, so a GC could drop its entry while the
+    // caller still reads (and later releases) the result
+    Pinned.track(if (cutsRow.isNullAt(0)) {
       // no finite score anywhere (every doc < 2 tokens, or an empty
       // training corpus NULLs every avg_logprob): banding is
       // undefined — null band, never an opaque NPE on the cuts
@@ -385,7 +388,7 @@ object TextAnalysis {
         when(col("avg_logprob") >= hi, "head")
           .when(col("avg_logprob") >= lo, "middle")
           .otherwise("tail"))
-    }
+    })
   }
 
   /** Free the materialized LM-score blocks behind a `ppxBands` result

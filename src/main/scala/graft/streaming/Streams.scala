@@ -456,7 +456,7 @@ object Streams {
                 hist.write.mode("overwrite")
                   .parquet(s"$storePath/batch=$batchId")
               }
-            } finally hist.unpersist()
+            } finally graft.ops.NearDup.freeLocalCheckpoint(hist)
           }
           mfs.create(marker, true).close()
         }

@@ -208,6 +208,30 @@ class BpeSpec extends AnyFunSuite {
     assert(fromStore() == oneShot)
   }
 
+  test("checkpoint blocks are freed: trainer, histogram store fold and sink drain leave no persisted RDD") {
+    import graft.streaming.Streams
+    val docs = Seq((1L, "low lower lowest"), (2L, "new newer newest low"))
+      .toDF("doc_id", "text")
+    val dir = TestSpark.tempDir("bpefree")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def survivors(f: => Unit): Set[Int] = {
+      val before = persisted
+      f
+      (persisted -- before).toSet
+    }
+    assert(survivors(Bpe.trainMergesDistributed(Bpe.wordHistogram(docs, "text"), 4)).isEmpty,
+      "trainMergesDistributed")
+    assert(survivors(Bpe.updateHistogramStore(spark, s"$dir/hist", docs, "text")).isEmpty,
+      "updateHistogramStore")
+    docs.coalesce(1).write.parquet(s"$dir/in/f=0")
+    assert(survivors {
+      Streams.bpeHistogramSink(
+        Streams.fileStream(spark, s"$dir/in/*/", docs.schema, maxFilesPerTrigger = 1),
+        "text", s"$dir/store", s"$dir/ckpt").start().awaitTermination()
+    }.isEmpty, "bpeHistogramSink")
+    assert(spark.read.parquet(s"$dir/store").count() > 0)
+  }
+
   test("histogram truncation is deterministic under ties") {
     val df = Seq("b b a a", "c c").toDF("text")
     // all of a/b/c have count 2; topM=2 keeps (a, b) by word asc

@@ -305,6 +305,9 @@ class CorpusOpsSpec extends AnyFunSuite {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val banded = TextAnalysis.ppxBands(docs, docs, "doc_id", col("text"))
     banded.count() // fully consume before releasing
+    // the registry holds weak refs: the pin must survive a GC for as
+    // long as the caller holds the result
+    System.gc()
     assert(graft.ops.Pinned.trackedCount >= 1, "ppxBands must register its pin")
     val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(pinned.nonEmpty, "the scored LM table must be checkpoint-persisted")

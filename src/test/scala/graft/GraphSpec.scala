@@ -529,8 +529,10 @@ class GraphSpec extends AnyFunSuite {
       graft.ops.NearDup.minhashSignaturesFused(df, "doc_id", col("text"))
     val dir = s"${TestSpark.tempDir("lshcompact")}/sigs"
     val buckets = 8
-    // three appends → up to 3 files per bucket
+    // one append writes each bucket from one task: ≤1 file per bucket
     graft.ops.NearDup.appendSignatureStore(sigs(docs), "doc_id", dir, buckets = buckets)
+    assert(filesPerBucket(dir).values.max == 1, filesPerBucket(dir).toString)
+    // three appends → up to 3 files per bucket
     graft.ops.NearDup.appendSignatureStore(sigs(half), "doc_id", dir, buckets = buckets)
     def probe() = graft.ops.NearDup.probeSignatureStore(spark, dir, sigs(rest),
       "doc_id", buckets = buckets)
